@@ -27,12 +27,14 @@ engine):
   hit leaves (partition pruning = the tree descent), and the hyperplane
   forest is a small driver/broadcast object (≡ the .npy/leaves.json
   artifacts, gann.py:183-191).
-- search is a join: queries descend the forest driver-side (tiny
-  matmuls), producing (tree_id, leaf_id, qid, qvec); joining that
-  against the index touches ~n_trees * leaf_size candidates per query,
-  ids are deduped across trees (dropDuplicates ≡ the C hash set), and
-  per-query top-k is a window — Spark's TakeOrdered heap ≡ gann.c's
-  bounded max-heap.
+- search is a scan-side kernel: queries descend the forest driver-side
+  (tiny matmuls) into a (tree_id, leaf_id) -> queries map; the
+  partition-pruned scan reads only the hit leaves and one Arrow kernel
+  (mapInArrow) scores each leaf's rows against the queries that reached
+  it — ~n_trees * leaf_size candidates per query, with Catalyst's exact
+  fold arithmetic (no query frame, no join); ids are deduped across
+  trees (dropDuplicates ≡ the C hash set), and per-query top-k is a
+  window — Spark's TakeOrdered heap ≡ gann.c's bounded max-heap.
 """
 
 from __future__ import annotations
@@ -49,6 +51,8 @@ from pyspark.sql import functions as F
 from radient_spark.lineage import truncate
 
 MAX_LEAF_SIZE = 200  # gann.py:15
+# composite scoring-group key of a forest leaf: tree_id * _LEAF_KEY + leaf_id
+_LEAF_KEY = 1 << 32
 
 # Scale-adaptive width for the per-level build stages (optimization r12,
 # guide §2.2/§2.5): the reassignment union is coalesced back to a fixed
@@ -115,26 +119,238 @@ class _dynamic_partition_overwrite:
         )
 
 
-def _rerank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
-    """Shared exact-rerank tail: score candidates, per-query window top-k
-    with the deterministic (score desc, id asc) criterion."""
-    from radient_spark.functions import vector as V
+def _scan_schema(df: DataFrame, parts: list[str]) -> dict:
+    """Schema (as JSON) that spark.read.parquet returns for `df` written
+    with partitionBy(*parts): data columns first, then partition columns.
+    Saved beside the index so `load` needs no schema-inference job."""
+    from pyspark.sql.types import StructType
 
-    if metric == "cosine":
-        score = V.cosine_similarity(F.col("vector"), F.col("qvec"))
-    elif metric == "dot":
-        score = V.dot(F.col("vector"), F.col("qvec"))
-    elif metric == "l2":
-        score = -V.l2_distance(F.col("vector"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    scored = cand.withColumn("score", F.round(score, 6))
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    return StructType(fields + [df.schema[p] for p in parts]).jsonValue()
+
+
+def _read_index(spark: SparkSession, path: str, meta: dict) -> DataFrame:
+    """The saved index rows. With the sidecar's schema the read infers
+    nothing (indexes saved before it was recorded fall back to footer
+    inference); partition directories are listed on the driver, since
+    get_session raises the parallel-discovery threshold."""
+    from pyspark.sql.types import StructType
+
+    reader = spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(meta["schema"]))
+    return reader.parquet(path)
+
+
+def _isin(col: str, values) -> "F.Column":
+    """`col IN (values)` over integer literals in ONE expression parse:
+    Column.isin costs a py4j round-trip per literal, which for a batch
+    of probed cells was a fifth of search construction. Empty -> false."""
+    vals = sorted({int(v) for v in values})
+    if not vals:
+        return F.lit(False)
+    return F.expr(f"{col} IN ({','.join(map(str, vals))})")
+
+
+# ---------------------------------------------------------------- scoring
+# Every ANN candidate is scored by ONE executor-side Arrow kernel. It
+# reproduces the Catalyst fold of functions/vector.py bit for bit: cast
+# to float64, then a sequential left fold over the dimensions,
+# acc = acc + x*y, with the same fold for the squared norms and then
+# dot / (sqrt(|a|^2) * sqrt(|q|^2)). A BLAS `@` would reassociate the
+# sum and move the 6th decimal that the oracles hash, so the fold is
+# spelled out; numpy vectorizes each step across a whole block of
+# candidate pairs.
+_METRICS = ("cosine", "dot", "l2")
+
+
+def _arrow_matrix(col) -> tuple[np.ndarray, np.ndarray]:
+    """A list<float|double> Arrow array as an (n x d) float64 matrix,
+    zero-padded to its longest row, plus each row's length: -1 for a
+    NULL row or a row holding a NULL element, since Catalyst's fold
+    yields NULL for both."""
+    import pyarrow.compute as pc
+
+    lens = (
+        pc.list_value_length(col)
+        .fill_null(-1)
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+    )
+    flat = col.flatten()
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    d = int(lens.max(initial=0))
+    if flat.null_count == 0 and (lens == d).all():
+        return vals.reshape(len(lens), d), lens
+    size = np.maximum(lens, 0)
+    M = np.zeros((len(lens), d))
+    M[np.arange(d)[None, :] < size[:, None]] = vals
+    if flat.null_count:
+        nulls = np.concatenate(
+            [[0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False))]
+        )
+        ends = np.cumsum(size)
+        lens[nulls[ends] - nulls[ends - size] > 0] = -1
+    return M, lens
+
+
+def _transposed(A: np.ndarray, Q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """A and Q as contiguous (d x n) arrays zero-padded to one width.
+    Padding never changes an equal-length pair's fold: a fold that
+    starts at +0.0 never reaches -0.0, so adding the pads' 0*0 = +0.0 is
+    exact; unequal-length pairs are NULL anyway."""
+    d = max(A.shape[1], Q.shape[1])
+    AT, QT = (np.pad(M.T, ((0, d - M.shape[1]), (0, 0))) for M in (A, Q))
+    return AT, QT
+
+
+def _fold(XT: np.ndarray, YT: np.ndarray, diff: bool = False) -> np.ndarray:
+    """Left fold over the leading (dimension) axis of two broadcastable
+    arrays: sum_j x_j*y_j, or sum_j (x_j-y_j)^2 with diff=True, added in
+    dimension order from 0.0 like Catalyst's aggregate."""
+    acc = np.zeros(np.broadcast_shapes(XT.shape[1:], YT.shape[1:]))
+    for x, y in zip(XT, YT):
+        if diff:
+            t = x - y
+            acc += t * t
+        else:
+            acc += x * y
+    return acc
+
+
+def _block_scores(AT, QT, metric: str) -> tuple[np.ndarray, np.ndarray]:
+    """Raw scores of a block of pairs: AT (d,n,1) against QT (d,1,m)
+    scores every (row, query) pair, (d,P) against (d,P) scores column
+    by column. Returns (raw, zero) where zero marks the zero-norm pairs,
+    which Catalyst's try_divide makes NULL."""
+    if metric == "l2":
+        raw = -np.sqrt(_fold(AT, QT, diff=True))
+        return raw, np.zeros(raw.shape, dtype=bool)
+    dot = _fold(AT, QT)
+    if metric == "dot":
+        return dot, np.zeros(dot.shape, dtype=bool)
+    den = np.sqrt(_fold(AT, AT)) * np.sqrt(_fold(QT, QT))
+    zero = den == 0.0
+    return dot / np.where(zero, 1.0, den), zero
+
+
+def _scored_batch(qid, id_, raw, ok):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [qid, id_, pa.array(raw, mask=~ok)], names=["qid", "id", "raw"]
+    )
+
+
+def _scored_schema(qid_field, id_field):
+    """(qid, id, raw double) output schema of the scoring kernels."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    return StructType([qid_field, id_field, StructField("raw", DoubleType())])
+
+
+def _pair_scores(cand: DataFrame, metric: str) -> DataFrame:
+    """Row-wise kernel: candidate rows (qid, id, vector, qvec) ->
+    (qid, id, raw), each row's vector scored against its own qvec."""
+
+    def score(batches):
+        for b in batches:
+            A, alen = _arrow_matrix(b.column("vector"))
+            Q, qlen = _arrow_matrix(b.column("qvec"))
+            AT, QT = _transposed(A, Q)
+            raw, zero = _block_scores(AT, QT, metric)
+            ok = (alen >= 0) & (alen == qlen) & ~zero
+            yield _scored_batch(b.column("qid"), b.column("id"), raw, ok)
+
+    cand = cand.select("qid", "id", "vector", "qvec")
+    return cand.mapInArrow(
+        score, _scored_schema(cand.schema["qid"], cand.schema["id"])
+    )
+
+
+def _probe_scores(
+    pruned: DataFrame,
+    group: "F.Column",
+    probes: dict[int, list[int]],
+    queries: list[tuple[int, list[float]]],
+    metric: str,
+) -> DataFrame:
+    """Scan-side kernel: each row of the partition-pruned index scan is
+    scored against the queries that probed its group (`group` evaluates
+    to the keys of `probes`, whose values index into `queries`), one
+    (rows x queries) block per group. Emits (qid, id, raw). Queries are
+    float32-cast as an array<float> query column would be, so scores
+    equal the row-wise kernel's."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField
+
+    qids = np.asarray([qid for qid, _ in queries], dtype=np.int64)
+    Q, qlen = _arrow_matrix(
+        pa.array([list(v) for _, v in queries], pa.list_(pa.float32()))
+    )
+    probe_rows = {g: np.asarray(qs, dtype=np.int64) for g, qs in probes.items()}
+
+    def score(batches):
+        for b in batches:
+            A, alen = _arrow_matrix(b.column("vector"))
+            AT, QT = _transposed(A, Q)
+            keys, inv = np.unique(
+                b.column("__g").to_numpy(zero_copy_only=False),
+                return_inverse=True,
+            )
+            ri, qi, raw, ok = [], [], [], []
+            for u, key in enumerate(keys):
+                qs = probe_rows.get(int(key))
+                if qs is None:
+                    continue
+                rows = np.flatnonzero(inv == u)
+                r, q = rows[:, None], qs[None, :]
+                blk, zero = _block_scores(AT[:, r], QT[:, q], metric)
+                valid = (alen[r] >= 0) & (alen[r] == qlen[q]) & ~zero
+                ri.append(np.repeat(rows, len(qs)))
+                qi.append(np.tile(qs, len(rows)))
+                raw.append(blk.ravel())
+                ok.append(valid.ravel())
+            if not ri:
+                continue
+            ri, qi = np.concatenate(ri), np.concatenate(qi)
+            yield _scored_batch(
+                pa.array(qids[qi]),
+                b.column("id").take(pa.array(ri)),
+                np.concatenate(raw),
+                np.concatenate(ok),
+            )
+
+    scan = pruned.select("id", "vector", group.alias("__g"))
+    return scan.mapInArrow(
+        score, _scored_schema(StructField("qid", LongType()), scan.schema["id"])
+    )
+
+
+def _window_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (qid, id, raw) by the deterministic (score
+    desc, id asc) criterion over the 6-decimal rounded score."""
+    score = F.round("raw", 6)
+    w = Window.partitionBy("qid").orderBy(score.desc(), F.col("id").asc())
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
+        scored.select(
+            "qid", "id", score.alias("score"), F.row_number().over(w).alias("__rn")
+        )
         .filter(F.col("__rn") <= k)
         .select("qid", "id", "score")
     )
+
+
+def _check_metric(metric: str) -> None:
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}")
+
+
+def _rerank_topk(cand: DataFrame, k: int, metric: str) -> DataFrame:
+    """Shared exact-rerank tail for candidate rows carrying their query
+    vector: row-wise kernel scores, per-query window top-k."""
+    _check_metric(metric)
+    return _window_topk(_pair_scores(cand, metric), k)
 
 
 def _descend_batch(Q: "np.ndarray", tree: "_Tree") -> "np.ndarray":
@@ -527,19 +743,45 @@ class IvfIndex:
         ).partitionBy("cell_id").parquet(f"{path}/cells")
         with open(f"{path}/centroids.json", "w") as f:
             json.dump(
-                {"centroids": self.centroids.tolist(), "lattice": self.lattice},
+                {
+                    "centroids": self.centroids.tolist(),
+                    "lattice": self.lattice,
+                    "schema": _scan_schema(self.index_df, ["cell_id"]),
+                },
                 f,
             )
 
     @staticmethod
-    def load(spark: SparkSession, path: str) -> "IvfIndex":
+    def read_quantizer(path: str) -> "IvfIndex":
+        """The saved index's frozen quantizer alone, from centroids.json:
+        no cell listing, scan or tombstone read. Its index_df is None;
+        it serves `append_save`, which needs only the centroids."""
         with open(f"{path}/centroids.json") as f:
             meta = json.load(f)
-        df = spark.read.parquet(f"{path}/cells")
-        if _local_parquet_exists(f"{path}/tombstones"):
-            df = df.join(
-                spark.read.parquet(f"{path}/tombstones"), "id", "left_anti"
-            )
+        return IvfIndex(
+            None,
+            np.asarray(meta["centroids"], dtype=np.float64),
+            lattice=meta.get("lattice", False),
+        )
+
+    @staticmethod
+    def load(spark: SparkSession, path: str) -> "IvfIndex":
+        """Centroids + cell rows, minus tombstoned ids. Launches no job:
+        the tombstone sidecar (small; `compact` folds it away) is read on
+        the driver and applied as a literal NOT IN filter, so searches
+        plan no anti-join."""
+        with open(f"{path}/centroids.json") as f:
+            meta = json.load(f)
+        df = _read_index(spark, f"{path}/cells", meta)
+        tomb_dir = f"{path}/tombstones"
+        if _local_parquet_exists(tomb_dir):
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+
+            ids = pq.read_table(tomb_dir, columns=["id"])["id"]
+            ids = pc.unique(ids).drop_null().to_pylist()
+            # coalesce keeps NULL ids, as the left-anti join did
+            df = df.filter(F.coalesce(~_isin("id", ids), F.lit(True)))
         return IvfIndex(
             df,
             np.asarray(meta["centroids"], dtype=np.float64),
@@ -557,26 +799,22 @@ class IvfIndex:
         candidates, window top-k. Candidates ~ n_probes * n/n_cells.
         The probed cell set is driver-known, so it is pushed into the
         scan as a literal isin — static partition pruning over the
-        cell-partitioned index, like AnnIndex.search."""
-        spark = self.index_df.sparkSession
-        hits = []
-        for qid, vec in queries:
+        cell-partitioned index, like AnnIndex.search — and the scan
+        feeds the scoring kernel directly: no query frame, no join."""
+        _check_metric(metric)
+        probes: dict[int, list[int]] = {}
+        for i, (_qid, vec) in enumerate(queries):
             q = np.asarray(vec, dtype=np.float64)
             if self.lattice:
                 # micro-space centroids: probe with the quantized query
-                # (rerank below still scores the original qvec)
+                # (scoring below still uses the original query vector)
                 q = _micro_np(q)
             for cell in _nearest_cells(q[None, :], self.centroids, n_probes)[0]:
-                hits.append((qid, int(cell), [float(x) for x in vec]))
-        qdf = spark.createDataFrame(hits, "qid long, cell_id int, qvec array<float>")
-        probed = sorted({cell for _, cell, _ in hits})
-        pruned = (
-            self.index_df.filter(F.col("cell_id").isin(probed))
-            if probed
-            else self.index_df
+                probes.setdefault(int(cell), []).append(i)
+        pruned = self.index_df.filter(_isin("cell_id", probes))
+        return _window_topk(
+            _probe_scores(pruned, F.col("cell_id"), probes, queries, metric), k
         )
-        cand = pruned.join(F.broadcast(qdf), on="cell_id")
-        return _rerank_topk(cand, k, metric)
 
     def search_df(
         self,
@@ -1255,6 +1493,7 @@ class AnnIndex:
                 for t in self.trees
             ],
         }
+        meta["schema"] = _scan_schema(self.index_df, ["tree_id", "leaf_id"])
         with open(f"{path}/forest.json", "w") as f:
             json.dump(meta, f)
 
@@ -1270,7 +1509,7 @@ class AnnIndex:
                 t.nodes[(int(lvl), int(node))] = (v["w"], v["cut"])
             trees.append(t)
         return AnnIndex(
-            spark.read.parquet(f"{path}/leaves"),
+            _read_index(spark, f"{path}/leaves", meta),
             trees,
             meta["dim"],
             build_metric=meta.get("build_metric", "euclidean"),
@@ -1326,52 +1565,46 @@ class AnnIndex:
         k: int = 10,
         metric: str | None = None,
     ) -> DataFrame:
-        """Batch search: driver-side forest descent -> (tree, leaf) hit
-        list -> statically partition-pruned scan -> broadcast join ->
-        cross-tree id dedup -> per-query top-k.
+        """Batch search: driver-side forest descent -> (tree, leaf) ->
+        queries map -> statically partition-pruned scan -> scan-side
+        scoring kernel -> cross-tree id dedup -> per-query top-k.
 
         The hit list is known on the driver, so the (tree_id, leaf_id)
         predicate is pushed into the scan as a LITERAL filter — the
         partitioned index reads ONLY the touched leaf directories
-        (PartitionFilters, not a full-index scan + join).
+        (PartitionFilters, not a full-index scan + join), and each
+        leaf's rows are scored against the queries that reached it.
 
         Returns (qid, id, score) with score descending per query.
         """
         metric = self._resolve_metric(metric)
-        spark = self.index_df.sparkSession
-        hits = []
-        for qid, vec in queries:
+        _check_metric(metric)
+        probes: dict[int, list[int]] = {}
+        for i, (_qid, vec) in enumerate(queries):
             q = np.asarray(vec, dtype=np.float64)
             if self.build_metric == "cosine":
                 # angular forest: cuts were taken on unit-vector
                 # projections, so descent must see the unit query
-                # (rerank below still scores the original qvec)
+                # (scoring below still uses the original query vector)
                 q = q / (np.linalg.norm(q) + 1e-12)
             elif self.build_metric == "lattice":
                 # lattice forest: cuts are exact integers over micro
                 # projections — descend with the micro-quantized query
-                # (rerank below still scores the original qvec)
+                # (scoring below still uses the original query vector)
                 q = _micro_np(q)
             for t, tree in enumerate(self.trees):
-                hits.append((qid, t, tree.descend(q), [float(x) for x in vec]))
-        qdf = spark.createDataFrame(
-            hits, "qid long, tree_id int, leaf_id int, qvec array<float>"
+                probes.setdefault(t * _LEAF_KEY + tree.descend(q), []).append(i)
+        prune = F.lit(False)
+        for t in range(len(self.trees)):
+            leaves = [g - t * _LEAF_KEY for g in probes if g // _LEAF_KEY == t]
+            prune = prune | ((F.col("tree_id") == t) & _isin("leaf_id", leaves))
+        group = F.col("tree_id").cast("long") * _LEAF_KEY + F.col("leaf_id")
+        scored = _probe_scores(
+            self.index_df.filter(prune), group, probes, queries, metric
         )
-        leaves_by_tree: dict[int, set[int]] = {}
-        for _, t, leaf, _ in hits:
-            leaves_by_tree.setdefault(t, set()).add(leaf)
-        prune = None
-        for t, leaves in leaves_by_tree.items():
-            clause = (F.col("tree_id") == t) & F.col("leaf_id").isin(
-                *[int(x) for x in leaves]
-            )
-            prune = clause if prune is None else (prune | clause)
-        pruned = self.index_df.filter(prune) if prune is not None else self.index_df
-        cand = pruned.join(
-            F.broadcast(qdf),
-            on=["tree_id", "leaf_id"],
-        ).dropDuplicates(["qid", "id"])  # ≡ the cross-tree hash-set dedup
-        return _rerank_topk(cand, k, metric)
+        # ≡ the cross-tree hash-set dedup: a row reached through two
+        # trees scores the same twice
+        return _window_topk(scored.dropDuplicates(["qid", "id"]), k)
 
     def search_df(
         self,

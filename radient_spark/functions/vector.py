@@ -11,9 +11,12 @@ These are the Spark-native equivalents of the reference's distance kernels:
   local/_gkmeans.py:74-98.
 
 All of them are Catalyst higher-order-function expressions (`zip_with` +
-`aggregate` + `transform`) so they run inside whole-stage codegen on the JVM
-— no Python boundary, vectorized by Tungsten, and usable in filters where
-Catalyst can still prune columns. Accumulation is a sequential left fold in
+`aggregate` + `transform`): JVM-side, with no Python boundary, and usable in
+filters where Catalyst can still prune columns. In Spark 4.1.2 these
+higher-order functions are `CodegenFallback`, so they are evaluated
+interpreted, outside whole-stage codegen; the ANN search path therefore
+scores with its own Arrow kernel (ann._fold_scores), which reproduces this
+module's arithmetic bit for bit. Accumulation is a sequential left fold in
 DOUBLE, which keeps results bit-deterministic for a given element order
 (important for the DuckDB oracle hash-compare).
 """
@@ -86,8 +89,9 @@ def norm(a: Column | str) -> Column:
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """dot(a,b) / (|a| |b|)."""
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot(a,b) / (|a| |b|); NULL when either side has zero norm (a plain
+    division would raise DIVIDE_BY_ZERO under ANSI mode)."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def cosine_distance(a: Column | str, b: Column | str) -> Column:

@@ -2968,30 +2968,33 @@ def _ann_lattice_sql(
     step, hyperplane w = m1 - m0, exact-long projections, order-statistic
     spill cuts, <=hi / >=lo child assignment), then descends each query
     (right iff proj > mid), dedups candidates across trees, and applies
-    the rounded-cosine top-k contract."""
+    the rounded-cosine top-k contract. Every CTE is MATERIALIZED: each
+    level references the previous ones several times, and inlined they
+    multiply into a plan that outgrew 12 GiB of DuckDB memory on a
+    500-row table; materialized, it runs in well under a second."""
     parts = [
-        f"""pts AS (
+        f"""pts AS MATERIALIZED (
   SELECT vec_id, u.i AS dim,
     CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT)
       + 4000000 AS v
   FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)
-), asg0 AS (
+), asg0 AS MATERIALIZED (
   SELECT vec_id, t.t::INT AS tree, 0 AS leaf
   FROM embeddings, unnest(range(0, {n_trees})) AS t(t)
 )"""
     ]
     for L in range(levels):
-        parts.append(f"""sd{L} AS (
+        parts.append(f"""sd{L} AS MATERIALIZED (
   SELECT tree, leaf, vec_id,
     row_number() OVER (PARTITION BY tree, leaf
       ORDER BY ('0x' || substring(md5(concat_ws('_', {seed}, {L}, tree, leaf, vec_id)), 1, 8))::BIGINT,
                vec_id) - 1 AS r
   FROM asg{L}
   QUALIFY r < 2
-), sc{L} AS (
+), sc{L} AS MATERIALIZED (
   SELECT s.tree, s.leaf, s.r, p.dim, p.v AS cv
   FROM sd{L} s JOIN pts p USING (vec_id)
-), nr{L} AS (
+), nr{L} AS MATERIALIZED (
   SELECT a.vec_id, a.tree, a.leaf, sc.r,
     SUM((p.v - sc.cv) * (p.v - sc.cv)) AS d
   FROM asg{L} a JOIN pts p USING (vec_id)
@@ -2999,7 +3002,7 @@ def _ann_lattice_sql(
   GROUP BY a.vec_id, a.tree, a.leaf, sc.r
   QUALIFY row_number() OVER (
     PARTITION BY a.vec_id, a.tree, a.leaf ORDER BY d, sc.r) = 1
-), m{L} AS (
+), m{L} AS MATERIALIZED (
   SELECT sc.tree, sc.leaf, sc.r, sc.dim, COALESCE(mm.mv, sc.cv) AS mv
   FROM sc{L} sc LEFT JOIN (
     SELECT n.tree, n.leaf, n.r, p.dim, SUM(p.v) // COUNT(*) AS mv
@@ -3007,17 +3010,17 @@ def _ann_lattice_sql(
     GROUP BY n.tree, n.leaf, n.r, p.dim
   ) mm ON sc.tree = mm.tree AND sc.leaf = mm.leaf
       AND sc.r = mm.r AND sc.dim = mm.dim
-), w{L} AS (
+), w{L} AS MATERIALIZED (
   SELECT m1.tree, m1.leaf, m1.dim, m1.mv - m0.mv AS wv
   FROM m{L} m1 JOIN m{L} m0
     ON m1.tree = m0.tree AND m1.leaf = m0.leaf AND m1.dim = m0.dim
   WHERE m1.r = 1 AND m0.r = 0
-), pj{L} AS (
+), pj{L} AS MATERIALIZED (
   SELECT a.vec_id, a.tree, a.leaf, SUM(p.v * w.wv) AS pr
   FROM asg{L} a JOIN pts p USING (vec_id)
   JOIN w{L} w ON w.tree = a.tree AND w.leaf = a.leaf AND w.dim = p.dim
   GROUP BY a.vec_id, a.tree, a.leaf
-), ct{L} AS (
+), ct{L} AS MATERIALIZED (
   SELECT tree, leaf,
     MAX(CASE WHEN rn = lo_r THEN pr END) AS lo,
     MAX(CASE WHEN rn = mid_r THEN pr END) AS mid,
@@ -3031,7 +3034,7 @@ def _ann_lattice_sql(
             (COUNT(*) OVER (PARTITION BY tree, leaf) * {500 + spill_pm} + 999) // 1000) AS hi_r
     FROM pj{L}
   ) GROUP BY tree, leaf
-), asg{L + 1} AS (
+), asg{L + 1} AS MATERIALIZED (
   SELECT p.vec_id, p.tree, p.leaf * 2 AS leaf
   FROM pj{L} p JOIN ct{L} c ON p.tree = c.tree AND p.leaf = c.leaf
   WHERE p.pr <= c.hi
@@ -3040,25 +3043,25 @@ def _ann_lattice_sql(
   FROM pj{L} p JOIN ct{L} c ON p.tree = c.tree AND p.leaf = c.leaf
   WHERE p.pr >= c.lo
 )""")
-    parts.append(f"""q AS (
+    parts.append(f"""q AS MATERIALIZED (
   SELECT vec_id AS qid, embedding AS qvec
   FROM embeddings ORDER BY vec_id LIMIT {nq}
-), qpts AS (
+), qpts AS MATERIALIZED (
   SELECT qid, u.i AS dim,
     CAST(round(CAST(qvec[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT)
       + 4000000 AS v
   FROM q, unnest(range(1, len(qvec) + 1)) AS u(i)
-), qn0 AS (
+), qn0 AS MATERIALIZED (
   SELECT qid, t.t::INT AS tree, 0 AS node
   FROM q, unnest(range(0, {n_trees})) AS t(t)
 )""")
     for L in range(levels):
-        parts.append(f"""qp{L} AS (
+        parts.append(f"""qp{L} AS MATERIALIZED (
   SELECT a.qid, a.tree, a.node, SUM(p.v * w.wv) AS pr
   FROM qn{L} a JOIN qpts p USING (qid)
   JOIN w{L} w ON w.tree = a.tree AND w.leaf = a.node AND w.dim = p.dim
   GROUP BY a.qid, a.tree, a.node
-), qn{L + 1} AS (
+), qn{L + 1} AS MATERIALIZED (
   SELECT p.qid, p.tree,
     p.node * 2 + CASE WHEN p.pr > c.mid THEN 1 ELSE 0 END AS node
   FROM qp{L} p JOIN ct{L} c ON p.tree = c.tree AND c.leaf = p.node
@@ -3069,11 +3072,11 @@ def _ann_lattice_sql(
         " * sqrt(list_dot_product(q.qvec::DOUBLE[], q.qvec::DOUBLE[]))), 6)"
     )
     return ("WITH " + ",\n".join(parts) + f""",
-cand AS (
+cand AS MATERIALIZED (
   SELECT DISTINCT qn.qid, a.vec_id AS id
   FROM qn{levels} qn JOIN asg{levels} a
     ON a.tree = qn.tree AND a.leaf = qn.node
-), scored AS (
+), scored AS MATERIALIZED (
   SELECT c.qid, c.id, {sim} AS score
   FROM cand c
   JOIN embeddings e ON e.vec_id = c.id
@@ -3094,7 +3097,8 @@ def q_ann_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     descends to holds the full corpus and the search IS exact top-k —
     the same degenerate-configuration trick as q_ivf_search_exact. This
     drives the whole forest machinery (build loop, descent, partition
-    pruning predicate, broadcast join, cross-tree dedup, rerank window)
+    pruning predicate, scan-side scoring kernel, cross-tree dedup,
+    rerank window)
     under the driver's value gate; the pruned realistic configuration
     stays rows-only + recall-tested (tests/test_ann.py)."""
     from radient_spark.ann import AnnIndex
@@ -7037,9 +7041,9 @@ def q_sql_api_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector top-k through the SQL front door: cosine registered as an
     inlined SQL scalar function + a per-query ranking window — the
     `ORDER BY cosine_distance(vec, q) LIMIT k` surface SURVEY §4.2
-    deferred, now pinned by a value oracle. The plan is identical to
-    the DataFrame path's exact search (_rerank_topk): broadcast query
-    rows, codegen'd fold per candidate, TakeOrdered top-k — no UDF, no
+    deferred, now pinned by a value oracle. Broadcast query rows, a
+    JVM-side fold per candidate (the arithmetic the ANN scoring kernel,
+    ann._fold_scores, reproduces), TakeOrdered top-k — no UDF, no
     Python."""
     register_views(spark, sf_dir)
     register_sql_vector_functions(spark)

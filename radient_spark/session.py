@@ -47,6 +47,10 @@ def get_session(app_name: str = "radient_spark") -> SparkSession:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
         )
+        # List partition directories on the driver, never in a
+        # parallel-discovery job: under local[N] that job only adds task
+        # launches (a 64-cell IVF index load paid a 64-task job).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )

@@ -402,14 +402,15 @@ def ivf_ingest_sink(
     The index must already exist at `index_path` (IvfIndex.build + save
     seeds the centroids); the checkpoint gives exactly-once per input
     file, and since append touches only the cells the batch lands in,
-    steady-state cost per batch is one scan of the batch itself."""
+    steady-state cost per batch is one scan of the batch itself: only
+    centroids.json is read (no cell listing or tombstone read), and an
+    empty batch appends nothing, so no emptiness probe re-reads it."""
     from radient_spark.ann import IvfIndex
 
     def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
-            return
-        index = IvfIndex.load(df.sparkSession, index_path)
-        index.append_save(df, index_path, id_col=id_col, vec_col=vec_col)
+        IvfIndex.read_quantizer(index_path).append_save(
+            df, index_path, id_col=id_col, vec_col=vec_col
+        )
 
     return foreach_batch_sink(stream, checkpoint, batch_fn)
 

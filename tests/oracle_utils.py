@@ -4,14 +4,27 @@ driver's order-insensitive, column-name-sorted value comparison."""
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 
 import duckdb
 
 from radient_spark.catalog import TABLES
 
+# An explicit cap below DuckDB's 80%-of-RAM default, with a spill
+# directory under Spark's local dirs, so a large oracle spills to disk
+# instead of running the shared host out of memory.
+DUCKDB_MEMORY_LIMIT = "8GB"
+
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    local = os.environ.get("SPARK_LOCAL_DIRS", tempfile.gettempdir())
+    con = duckdb.connect(
+        config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "temp_directory": os.path.join(local.split(",")[0], "duckdb_spill"),
+        }
+    )
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con

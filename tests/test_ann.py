@@ -179,6 +179,116 @@ def test_ivf_save_load_roundtrip(spark, emb, tmp_path):
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters", 1)[1][:200]
     assert "cell_id" in pf, pf
+    # tombstoned: the scan feeds the scoring kernel directly, with the
+    # tombstones as a literal filter, not a broadcast anti-join
+    idx.tombstone_save(emb.select("id").limit(3), path)
+    tomb = IvfIndex.load(spark, path)
+    plan = tomb.search(queries, k=5, n_probes=2)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert "cell_id" in plan.split("PartitionFilters", 1)[1][:200]
+
+
+def _job_ids(spark, group, fn):
+    """(fn(), ids of the Spark jobs fn ran), counted through the job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivf_load_and_search_job_census(spark, tmp_path):
+    """A saved, tombstoned 64-cell index loads without any job (cells
+    listed on the driver, schema from the sidecar, tombstones read on
+    the driver), and a list search runs in at most 3 jobs: the probed
+    scan + kernel feeds the top-k window with no broadcast or join."""
+    from radient_spark.ann import IvfIndex
+
+    rng = np.random.RandomState(11)
+    X = rng.randn(3000, 8).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(len(X))], "id long, vector array<float>"
+    )
+    path = str(tmp_path / "ivf64")
+    IvfIndex.build(df, n_cells=64, seed=3).save(path)
+    gone = spark.createDataFrame([(i,) for i in range(0, 3000, 100)], "id long")
+    IvfIndex.read_quantizer(path).tombstone_save(gone, path)
+
+    idx, load_jobs = _job_ids(spark, "census_load", lambda: IvfIndex.load(spark, path))
+    assert load_jobs == []
+    queries = [(i, X[i].tolist()) for i in range(1, 17)]
+    df = idx.search(queries, k=5, n_probes=8)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+    assert "cell_id" in plan.split("PartitionFilters", 1)[1][:200]
+    rows, search_jobs = _job_ids(spark, "census_search", df.collect)
+    assert len(search_jobs) <= 3, search_jobs
+    assert len(rows) == 16 * 5
+    assert not {r["id"] for r in rows} & set(range(0, 3000, 100))
+    # every query finds itself at rank 1 (all 16 are live ids)
+    top = {r["qid"]: r["id"] for r in rows if r["score"] == 1.0}
+    assert all(top.get(q) == q for q, _ in queries), top
+
+
+def test_scoring_kernel_matches_catalyst_fold(spark):
+    """The Arrow scoring kernel equals functions/vector.py bit for bit
+    (repr equality, so -0.0 vs 0.0 would fail), on ordinary rows and on
+    the edge rows: a zero vector on either side (NULL: cosine uses
+    try_divide), a NULL vector (NULL), a dimension mismatch (NULL), a
+    NULL element (NULL) and a NaN element (NaN). The scan-side kernel,
+    whose queries arrive as a Python list, gives the same scores."""
+    from radient_spark.ann import _pair_scores, _probe_scores
+    from radient_spark.functions import vector as V
+
+    rng = np.random.RandomState(5)
+    vecs = [[float(x) for x in rng.randn(8)] for _ in range(20)]
+    vecs += [
+        [0.0] * 8,
+        None,
+        [1.0] * 7,
+        [1.0, float("nan")] + [0.5] * 6,
+        [1.0, None] + [0.5] * 6,
+    ]
+    queries = [(1, [float(x) for x in rng.randn(8)]), (2, [0.0] * 8)]
+    cand = spark.createDataFrame(
+        [(qid, i, v, q) for qid, q in queries for i, v in enumerate(vecs)],
+        "qid long, id long, vector array<float>, qvec array<float>",
+    )
+    index = spark.createDataFrame(
+        list(enumerate(vecs)), "id long, vector array<float>"
+    )
+    catalyst = {
+        "cosine": V.cosine_similarity("vector", "qvec"),
+        "dot": V.dot("vector", "qvec"),
+        "l2": -V.l2_distance("vector", "qvec"),
+    }
+    for metric, expr in catalyst.items():
+        want = {
+            (r["qid"], r["id"]): repr(r["s"])
+            for r in cand.select("qid", "id", expr.alias("s")).collect()
+        }
+        pair = {
+            (r["qid"], r["id"]): repr(r["raw"])
+            for r in _pair_scores(cand, metric).collect()
+        }
+        probe = {
+            (r["qid"], r["id"]): repr(r["raw"])
+            for r in _probe_scores(
+                index, F.lit(0), {0: [0, 1]}, queries, metric
+            ).collect()
+        }
+        assert pair == want, metric
+        assert probe == want, metric
+        if metric == "cosine":
+            assert want[(1, 20)] == want[(1, 21)] == want[(1, 22)] == "None"
+            assert want[(1, 24)] == "None" and want[(1, 23)] == "nan"
+            # a zero query scores NULL, except against the NaN row (NaN)
+            assert {want[(2, i)] for i in range(len(vecs)) if i != 23} == {"None"}
 
 
 def test_ivf_incremental_add_and_append_save(spark, emb, tmp_path):

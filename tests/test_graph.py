@@ -447,12 +447,23 @@ def test_sweep_jobs_do_not_scale_with_rounds(spark):
             [(i, (i + 1) % 10) for i in range(10)], "src long, dst long"
         )
         label_propagation(edges, rounds=2).collect()  # warm the path
-        before = len(sc.statusTracker().getJobIdsForGroup(None))
-        label_propagation(edges, rounds=2).collect()
-        mid = len(sc.statusTracker().getJobIdsForGroup(None))
-        label_propagation(edges, rounds=6).collect()
-        jobs_2 = mid - before
-        jobs_6 = len(sc.statusTracker().getJobIdsForGroup(None)) - mid
+
+        def sweep_jobs(rounds: int) -> int:
+            # counted through a job group of its own: differences of the
+            # retained ungrouped job list go negative once the status
+            # store evicts its oldest jobs (spark.ui.retainedJobs)
+            group = f"sweep_jobs_{rounds}_rounds"
+            sc.setJobGroup(group, group)
+            try:
+                label_propagation(edges, rounds=rounds).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        jobs_2 = sweep_jobs(2)
+        jobs_6 = sweep_jobs(6)
         # Relative pin (round-12 advice): under the lazy-checkpoint
         # discipline the only per-round job is the join's
         # broadcast-relation build (one per round, inherent to the

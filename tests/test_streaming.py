@@ -363,6 +363,31 @@ def test_ivf_ingest_sink_grows_saved_index(spark, tmp_path):
     assert got == {qid}
 
 
+def test_ivf_ingest_sink_reads_each_row_once(spark, tmp_path):
+    """The sink reads a micro-batch once: a 500-row file reports
+    numInputRows == 500 (an emptiness probe or a full index load per
+    batch would read it again), and all 500 rows land."""
+    import numpy as np
+
+    from radient_spark.ann import IvfIndex
+
+    rng = np.random.RandomState(4)
+    schema = "id long, vector array<float>"
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(520)]
+    index_path = str(tmp_path / "ivf_once")
+    IvfIndex.build(spark.createDataFrame(rows[:20], schema), n_cells=4, seed=7).save(
+        index_path
+    )
+    in_dir = str(tmp_path / "vin_once")
+    spark.createDataFrame(rows[20:], schema).coalesce(1).write.parquet(in_dir)
+    stream = spark.readStream.schema(schema).parquet(in_dir)
+    q = streaming.ivf_ingest_sink(stream, index_path, str(tmp_path / "ck_once"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 500
+    assert IvfIndex.load(spark, index_path).index_df.count() == 520
+
+
 def test_sketch_maintenance_sink_converges_to_batch_sketch(spark, tmp_path):
     """Streaming register maintenance across two micro-batch rounds must
     produce EXACTLY the registers of a one-shot batch sketch over the
